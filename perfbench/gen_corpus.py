@@ -86,12 +86,12 @@ def _vocabulary(rng: np.random.Generator, size: int) -> list[str]:
     p = _norm(_LETTER_P)
     while len(todo):
         lens = lengths[todo]
-        letters = rng.choice(_LETTERS, size=int(lens.sum()), p=p)
+        letters = "".join(rng.choice(_LETTERS, size=int(lens.sum()), p=p).tolist())
         interior = rng.random(len(todo)) < 0.03
         marks = rng.integers(0, len(_INTERIOR), len(todo))
         retry, pos = [], 0
-        for i, k in enumerate(lens):
-            w = "".join(letters[pos:pos + k])
+        for i, k in enumerate(lens.tolist()):
+            w = letters[pos:pos + k]
             pos += k
             if interior[i] and k >= 2:
                 cut = 1 + int(marks[i]) % (k - 1)

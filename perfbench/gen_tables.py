@@ -14,8 +14,10 @@ repository's sf0.1 test tables (TESTDATA.md / FIXTURES.md):
   duplicates, five languages, twenty sources;
 - ``embeddings``: unit vectors clustered by ten labels.
 
-One parquet file per table, one row group, snappy — the layout the
-readers layer sees in the real test data. Same seed, same bytes.
+``doc_scale`` sizes ``documents`` apart from the rest, for a workload
+that reads only it. One parquet file per table, one row group, snappy —
+the layout the readers layer sees in the real test data. Same seed, same
+bytes.
 """
 
 from __future__ import annotations
@@ -57,13 +59,14 @@ def _names(prefix: str, n: int) -> list[str]:
     return [f"{prefix}#{i:09d}" for i in range(n)]
 
 
-def make_tables(seed: int, scale: float = 0.1) -> dict[str, pa.Table]:
-    """All ten tables at ``scale`` (0.1 = the sf0.1 row counts)."""
+def make_tables(seed: int, scale: float = 0.1, doc_scale: float | None = None) -> dict[str, pa.Table]:
+    """All ten tables at ``scale`` (0.1 = the sf0.1 row counts), ``documents``
+    at ``doc_scale`` if given."""
     rng = np.random.default_rng(seed)
     n_cust, n_supp, n_part = int(150_000 * scale), int(10_000 * scale), int(200_000 * scale)
     n_ord, n_line = int(1_500_000 * scale), int(6_000_000 * scale)
     n_ev, n_users = int(1_000_000 * scale), max(15, int(15_000 * scale))
-    n_docs, n_vec = int(50_000 * scale), int(20_000 * scale)
+    n_docs, n_vec = int(50_000 * (doc_scale or scale)), int(20_000 * scale)
 
     out: dict[str, pa.Table] = {}
     out["region"] = pa.table({
@@ -165,11 +168,12 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
     })
 
 
-def write_tables(out_dir: str, seed: int, scale: float = 0.1) -> dict[str, int]:
+def write_tables(out_dir: str, seed: int, scale: float = 0.1,
+                 doc_scale: float | None = None) -> dict[str, int]:
     """Write every table as ``<out_dir>/<name>.parquet``; returns name -> bytes."""
     os.makedirs(out_dir, exist_ok=True)
     sizes = {}
-    for name, table in make_tables(seed, scale).items():
+    for name, table in make_tables(seed, scale, doc_scale).items():
         path = os.path.join(out_dir, f"{name}.parquet")
         pq.write_table(table, path, compression="snappy")
         sizes[name] = os.path.getsize(path)

@@ -37,6 +37,15 @@ def describe() -> dict:
     }
 
 
+def cpu_jiffies() -> tuple[int, int]:
+    """(stolen, total) CPU time of the machine so far, from ``/proc/stat``:
+    stolen time is when the hypervisor ran another guest on our CPUs."""
+    with open("/proc/stat") as fh:
+        user, nice, system, idle, iowait, irq, softirq, steal = (
+            int(v) for v in fh.readline().split()[1:9])
+    return steal, user + nice + system + idle + iowait + irq + softirq + steal
+
+
 def heap_mb() -> int:
     return int(min(1024, mem_total_mb() / 4))
 

@@ -122,6 +122,7 @@ def measure(args, spec: dict, work_dir: str) -> tuple[dict, list[str]]:
     import workloads
 
     host_info = host.describe()
+    jiffies = host.cpu_jiffies()
     cpus = host.cpus()
     conf = host.session_conf(work_dir, ui=bool(args.trace))
     wall = {"start": time.perf_counter()}
@@ -166,7 +167,9 @@ def measure(args, spec: dict, work_dir: str) -> tuple[dict, list[str]]:
     failed_frac = tally.failed / max(tally.attempted, 1)
     lines.append(f"{'failed_frac':<34} {failed_frac:>12.6g} {'ratio':<6} "
                  f"{tally.failed} of {tally.attempted} operations")
-    lines.append("host " + " ".join(f"{k}={v}" for k, v in host_info.items()))
+    stolen, total = (b - a for a, b in zip(jiffies, host.cpu_jiffies()))
+    lines.append("host " + " ".join(f"{k}={v}" for k, v in host_info.items())
+                 + f" cpu_steal_pct={100 * stolen / max(total, 1):.1f} (during the run)")
     lines.append(f"input_mb={input_mb:.3f} passes={len(res.pass_s)} "
                  f"pass_s={[round(t, 3) for t in res.pass_s]}")
     marks = list(wall.items())

@@ -1,19 +1,20 @@
 """The benchmark's workloads, their correctness checks and layer traces.
 
 Each workload is a closed loop with one client: the benchmark process
-issues one operation, waits for it, then issues the next. WARMUP_PASSES untimed
-passes run first (class loading, codegen, JIT and caches; their outputs are
-checked), then passes run back to back until the measuring window has
-passed and at least :data:`MIN_PASSES` have completed. ``job_s`` is the
-median pass.
+issues one operation, waits for it, then issues the next. WARMUP_PASSES
+untimed passes run first (class loading, codegen, JIT and caches; their
+outputs are checked), then passes run back to back until the measuring
+window has passed and at least the workload's :data:`MIN_PASSES` have
+completed. ``job_s`` is the median pass.
 
 ``corpus_zipf``  the reference word-count job on a generated corpus:
                  ``readers.load_text_corpus`` -> ``wordcount.count_words``
                  -> ``orderBy`` -> ``zipWithIndex`` rank ->
                  ``sinks.write_reference_output``; one operation = one pass.
-``doc_curation`` three LLM-prep queries over the generated ``documents``
+``doc_curation`` two LLM-prep queries over the generated ``documents``
                  table, in an order fixed by the seed; one operation = one
-                 query, one pass = all three.
+                 query, one pass = both. Each pass starts with nothing
+                 cached, so every pass recomputes from the parquet scan.
 
 In a traced run the same passes are split into nested prefixes, each
 ended by its own action; a layer's self time is the difference between
@@ -28,7 +29,6 @@ import importlib.util
 import os
 import random
 import shutil
-import threading
 import time
 from dataclasses import dataclass, field
 from urllib.parse import urlparse
@@ -42,17 +42,22 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CORPUS_MB = 15.3
 CORPUS_FILES = 29
 TABLE_SCALE = 0.1
+#: the tables doc_curation never reads
+TINY_SCALE = 0.001
 DOC_QUERIES = (
-    "pipeline_curation",
     "dedup_minhash_lsh_fast",
     "text_tfidf_top_terms",
 )
-#: untimed passes first: the cold one (class loading, codegen, JIT) and one
-#: more, because pass times keep falling for several passes as the JIT
-#: compiles the hot paths
-WARMUP_PASSES = 2
-MIN_PASSES = 3
-#: stop measuring after this long even if MIN_PASSES were not reached,
+#: untimed passes first: the cold one (class loading, codegen, the first
+#: JIT compiles). Pass times keep falling for several more passes while
+#: the JIT compiles the hot paths, so the timed passes sit on that curve;
+#: when the minimum number of passes outlasts the window, every run times
+#: the same passes of it
+WARMUP_PASSES = 1
+#: timed passes at least, per workload: 20-25 s of passes, as many as the
+#: run budget leaves after set-up and the cold pass
+MIN_PASSES = {"corpus_zipf": 3, "doc_curation": 5}
+#: stop measuring after this long even if MIN_PASSES is not reached,
 #: so one run stays well under three minutes
 MAX_WINDOW_S = 60.0
 
@@ -82,21 +87,19 @@ def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def closed_loop(run_pass, seconds: float, after_warmup=None) -> tuple[float, list[float]]:
+def closed_loop(run_pass, seconds: float, min_passes: int) -> tuple[float, list[float]]:
     """WARMUP_PASSES untimed passes, then passes back to back for
-    ``seconds`` (at least MIN_PASSES, at most MAX_WINDOW_S). Returns
+    ``seconds`` (at least ``min_passes``, at most MAX_WINDOW_S). Returns
     (seconds before the timed window, timed pass seconds)."""
     t0 = time.perf_counter()
     for _ in range(WARMUP_PASSES):
         run_pass(warmup=True)
-    if after_warmup is not None:
-        after_warmup()
     times: list[float] = []
     start = time.perf_counter()
     while True:
         times.append(run_pass(warmup=False))
         elapsed = time.perf_counter() - start
-        if elapsed >= MAX_WINDOW_S or (elapsed >= seconds and len(times) >= MIN_PASSES):
+        if elapsed >= MAX_WINDOW_S or (elapsed >= seconds and len(times) >= min_passes):
             return start - t0, times
 
 
@@ -209,7 +212,7 @@ def corpus_zipf(spark, queries, seed, seconds, work_dir, tracer, rest) -> Result
                 tally.fail(f"corpus pass raised {type(exc).__name__}: {exc}"[:300])
                 return time.perf_counter() - t0
 
-    warmup_s, times = closed_loop(run_pass, seconds)
+    warmup_s, times = closed_loop(run_pass, seconds, MIN_PASSES["corpus_zipf"])
     if rest is not None:
         _storage_samples(sample, rest)
     return Result(warmup_s, times, input_bytes, tally, layers)
@@ -240,17 +243,6 @@ def _storage_samples(sample, rest) -> None:
 # ---------------------------------------------------------------- doc_curation
 
 
-class _Collected:
-    """A query result already collected to pandas, handed to the oracle
-    comparison in place of the DataFrame (so the check does not re-run it)."""
-
-    def __init__(self, pdf):
-        self._pdf = pdf
-
-    def toPandas(self):
-        return self._pdf
-
-
 def _driver_mirror():
     spec = importlib.util.spec_from_file_location(
         "driver_mirror", os.path.join(ROOT, "tools", "driver_mirror.py"))
@@ -261,36 +253,50 @@ def _driver_mirror():
 
 class OracleCheck:
     """Compares each query's first result with its DuckDB oracle
-    (``registry.get_oracles()`` through ``driver_mirror.compare_pandas``) in
-    a background thread, while the warm-up passes continue; later results
-    must equal that first one cell for cell."""
+    (``registry.get_oracles()`` on ``driver_mirror.duck_con``, cells as
+    ``driver_mirror.pandas_cells`` gives them); every later result must
+    equal that first one cell for cell."""
 
     def __init__(self, oracles: dict[str, str], sf_dir: str):
         self.mirror = _driver_mirror()
         self.oracles, self.sf_dir = oracles, sf_dir
         self.reference: dict[str, tuple] = {}
-        self.verdict: dict[str, str] = {}  # name -> "ok" or the mismatch
-        self._threads: list[threading.Thread] = []
+        self.verdict: dict[str, str | None] = {}  # name -> None or the mismatch
+        self._con = None
 
-    def submit(self, name: str, pdf) -> None:
-        self.reference[name] = self.mirror.pandas_cells(pdf)
-        th = threading.Thread(target=self._compare, args=(name, pdf), daemon=True)
-        th.start()
-        self._threads.append(th)
-
-    def _compare(self, name: str, pdf) -> None:
+    def _oracle(self, name: str, cells: tuple) -> str | None:
         try:
-            ok, msg = self.mirror.compare_pandas(_Collected(pdf), self.oracles[name], self.sf_dir)
+            if self._con is None:
+                self._con = self.mirror.duck_con(self.sf_dir)
+            want = self.mirror.pandas_cells(self._con.execute(self.oracles[name]).df())
         except Exception as exc:  # the verdict records it; the run goes on
-            ok, msg = False, f"oracle raised {type(exc).__name__}: {exc}"
-        self.verdict[name] = "ok" if ok else msg
+            return f"oracle raised {type(exc).__name__}: {exc}"
+        if cells[0] != want[0]:
+            return f"columns {cells[0]}, oracle {want[0]}"
+        if len(cells[1]) != len(want[1]):
+            return f"{len(cells[1])} rows, oracle {len(want[1])}"
+        diff = next((i for i, (a, b) in enumerate(zip(cells[1], want[1])) if a != b), None)
+        return None if diff is None else f"row {diff}: {cells[1][diff]} != oracle {want[1][diff]}"
 
-    def wait(self) -> None:
-        for th in self._threads:
-            th.join()
+    def check(self, name: str, pdf) -> str | None:
+        """None if ``pdf`` is correct, else what is wrong with it."""
+        cells = self.mirror.pandas_cells(pdf)
+        if name not in self.reference:
+            self.reference[name] = cells
+            self.verdict[name] = self._oracle(name, cells)
+        elif cells != self.reference[name]:
+            return "result differs from the oracle-checked one"
+        return self.verdict[name]
 
-    def same_as_reference(self, name: str, pdf) -> bool:
-        return self.mirror.pandas_cells(pdf) == self.reference[name]
+
+def clear_pins(spark) -> None:
+    """Unpersist every cached frame and empty ``bounded_cache``'s FIFO, so
+    the next pass recomputes from the parquet scan and pins as the first
+    pass of a fresh session does."""
+    from wordcount_spark.operators import caching
+
+    spark.catalog.clearCache()
+    caching._pins.clear()
 
 
 def doc_curation(spark, queries, seed, seconds, work_dir, tracer, rest) -> Result:
@@ -299,18 +305,19 @@ def doc_curation(spark, queries, seed, seconds, work_dir, tracer, rest) -> Resul
     from wordcount_spark.sources import readers
 
     sf_dir = os.path.join(work_dir, "tables")
-    gen_tables.write_tables(sf_dir, seed, TABLE_SCALE)
+    # only ``documents`` is read; the rest exist so the oracle's views bind
+    gen_tables.write_tables(sf_dir, seed, TINY_SCALE, doc_scale=TABLE_SCALE)
     order = list(DOC_QUERIES)
     random.Random(seed).shuffle(order)
     oracle = OracleCheck(registry.get_oracles(), sf_dir)
     tally = Tally()
     layers: dict[str, list[float]] = {}
-    runs: dict[str, int] = dict.fromkeys(order, 0)
 
     def sample(name: str, value: float) -> None:
         layers.setdefault(name, []).append(value)
 
     def run_pass(warmup: bool) -> float:
+        clear_pins(spark)
         traced = rest is not None and not warmup
         if traced:
             before = rest.last_stage_id()
@@ -326,27 +333,27 @@ def doc_curation(spark, queries, seed, seconds, work_dir, tracer, rest) -> Resul
                 os.path.getsize(urlparse(f).path) for f in docs.inputFiles()) / 1e6)
             sample("readers.scan_tasks", scan["numTasks"])
             before = rest.last_stage_id()
+        results = {}
         build_s, t0 = 0.0, time.perf_counter()
         with tracer.span("pass"):
             for name in order:
                 tally.attempted += 1
-                runs[name] += 1
                 with tracer.span(f"query.{name}") as q:
                     try:
                         tb = time.perf_counter()
                         df = queries[name](spark, sf_dir)
                         build_s += time.perf_counter() - tb
-                        pdf = df.toPandas()
+                        results[name] = df.toPandas()
                     except Exception as exc:  # a failed query counts; the pass goes on
                         tally.fail(f"{name} raised {type(exc).__name__}: {exc}"[:300])
                         continue
                 if traced:
                     sample(f"query.{name}_s", q.seconds)
-                if name not in oracle.reference:
-                    oracle.submit(name, pdf)
-                elif not oracle.same_as_reference(name, pdf):
-                    tally.fail(f"{name}: result differs from the oracle-checked one")
         secs = time.perf_counter() - t0
+        for name, pdf in results.items():
+            problem = oracle.check(name, pdf)
+            if problem is not None:
+                tally.fail(f"{name}: {problem}"[:300])
         if traced:
             sample("queries.build_s", build_s)
             _spark_samples(sample, rest.stages_after(before), secs, spark)
@@ -354,13 +361,7 @@ def doc_curation(spark, queries, seed, seconds, work_dir, tracer, rest) -> Resul
         return secs
 
     input_bytes = os.path.getsize(os.path.join(sf_dir, "documents.parquet"))
-    # no oracle thread may compete with the timed passes
-    warmup_s, times = closed_loop(run_pass, seconds, after_warmup=oracle.wait)
-    for name in order:
-        verdict = oracle.verdict.get(name, "never produced a result")
-        if verdict != "ok":
-            for _ in range(runs[name]):
-                tally.fail(f"{name}: {verdict}"[:300])
+    warmup_s, times = closed_loop(run_pass, seconds, MIN_PASSES["doc_curation"])
     if rest is not None:
         _storage_samples(sample, rest)
     return Result(warmup_s, times, input_bytes, tally, layers)
